@@ -1,6 +1,6 @@
 """Layer-split benchmark of the fawac_cdc_spark engine.
 
-    python3 perfbench/run.py --workload olap-sf0.01 --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload olap-sf0.01 --seed 1 --seconds 30 --trace 0
 
 The run generates its inputs from the seed under ``.perfbench-work/``
 at the root of the checkout (removed at the end), starts one
@@ -27,7 +27,6 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_CYCLES = 3
 
 
 def process_age_s() -> float:
@@ -86,15 +85,18 @@ def configure_env(work: str) -> str:
     return memory
 
 
-def tail(values: list[float]) -> tuple[float, float]:
-    """(percentile, value) at the highest percentile with ten samples
-    beyond it.  Below 20 samples that percentile would fall under the
-    median, so the slowest sample (p100) is the tail instead."""
+def tail(values: list[float], min_samples: int) -> tuple[float, float]:
+    """(percentile, value) at a fixed percentile: the highest at which
+    ``min_samples``, the fewest samples a run takes, still have ten
+    samples beyond it (nearest rank).  A fixed percentile keeps the tail
+    from moving with the number of passes a run makes.  Below 20 samples
+    that percentile would fall under the median, so the slowest sample
+    (p100) is the tail instead."""
     xs = sorted(values)
-    n = len(xs)
-    if n < 20:
+    if min_samples < 20:
         return 100.0, xs[-1]
-    return 100.0 * (n - 10) / n, xs[n - 11]
+    rank = -(-len(xs) * (min_samples - 10) // min_samples)
+    return 100.0 * (min_samples - 10) / min_samples, xs[rank - 1]
 
 
 def stop_session(spark) -> None:
@@ -162,6 +164,9 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def run(args, workload, sf, cores, memory, work, datagen, wl, spans, bench) -> int:
+    # Seconds the benchmark spends on its own work (inputs, oracles)
+    # before the first timed operation; set-up time leaves them out.
+    t0 = time.perf_counter()
     data_dir = os.path.join(work, "data")
     counts = datagen.write_tables(data_dir, sf)
     backlog = os.path.join(work, "backlog")
@@ -174,36 +179,35 @@ def run(args, workload, sf, cores, memory, work, datagen, wl, spans, bench) -> i
             args.seed,
             workload.chunks,
         )
+    own_s = time.perf_counter() - t0
 
-    # Set-up, SETUP_CYCLES times: session, registry, catalog registration
-    # of the workload's tables.  The first cycle counts from process
-    # start (interpreter, imports, JVM launch, input generation).
+    # Set-up: session, registry, catalog registration of the workload's
+    # tables and an untimed warm-up that also checks the outputs.
     from fawac_cdc_spark import catalog, registry
     from fawac_cdc_spark.session import get_spark
     from fawac_cdc_spark.streaming.batch_equiv import cdc_latest_state_per_user
 
-    setups = []
-    spark = None
-    for cycle in range(SETUP_CYCLES):
-        if spark is not None:
-            spark.stop()
-        t0 = time.perf_counter()
-        spark = get_spark(f"perfbench-{args.workload}", cpus=cores)
-        specs = registry.all_specs()
-        for t in workload.tables:
-            catalog.load_table(spark, data_dir, t)
-        dt = time.perf_counter() - t0
-        setups.append(process_age_s() if cycle == 0 else dt)
+    t0 = time.perf_counter()
+    spark = get_spark(f"perfbench-{args.workload}", cpus=cores)
+    specs = registry.all_specs()
+    for t in workload.tables:
+        catalog.load_table(spark, data_dir, t)
+    session_s = time.perf_counter() - t0
 
     tally = wl.Tally()
     tracer = spans.Tracer(spark, enabled=bool(args.trace))
     t0 = time.perf_counter()
     if workload.chunks:
+        t1 = time.perf_counter()
         expected = cdc_latest_state_per_user(spark, data_dir).toPandas()
+        own_s += time.perf_counter() - t1
         wl.warm_stream(spark, backlog, os.path.join(work, "warm"))
     else:
-        wl.check_batch(spark, specs, data_dir, workload.queries, tally)
-    wl.calibrate(spark, 5)  # warms the calibration job itself
+        own_s += wl.check_batch(spark, specs, data_dir, workload.queries, tally)
+    t1 = time.perf_counter()
+    # The calibration job's own time settles after ~40 runs on 4 cores.
+    wl.calibrate(spark, 40)
+    own_s += time.perf_counter() - t1
     warmup_s = time.perf_counter() - t0
     cold_start_s = process_age_s()
 
@@ -233,6 +237,7 @@ def run(args, workload, sf, cores, memory, work, datagen, wl, spans, bench) -> i
     spark_version = spark.version
     stop_session(spark)
 
+    n_passes = len(tally.passes) + len(tally.traced_passes)
     detail = {
         "workload": args.workload,
         "seed": args.seed,
@@ -241,22 +246,27 @@ def run(args, workload, sf, cores, memory, work, datagen, wl, spans, bench) -> i
         "cores": cores,
         "driver_memory": memory,
         "spark_version": spark_version,
-        "setup_cycles_s": setups,
         "cold_start_s": cold_start_s,
+        "benchmark_own_s": own_s,
+        "session_s": session_s,
         "warmup_s": warmup_s,
         # CPU time the hypervisor gave to other guests while measuring:
         # host contention that slows a run without any code change.
         "host_steal_share": (ticks1[0] - ticks0[0]) / max(1, ticks1[1] - ticks0[1]),
         "passes_s": tally.passes,
-        "cpu_s_per_pass": (cpu1 - cpu0) / (len(tally.passes) + len(tally.traced_passes)),
+        "cpu_s_per_pass": (cpu1 - cpu0) / n_passes if n_passes else None,
         "traced_passes_s": tally.traced_passes,
         "ops_s": tally.by_op,
         "errors": tally.errors,
+        "error_rate": tally.failed / tally.attempted,
     }
     if args.trace:
         metrics = layer_metrics(tracer, tally, stream, cores, probe_s, detail)
     else:
-        metrics = end_to_end_metrics(tally, setups, rss, workload, detail, counts)
+        min_samples = wl.MIN_PASSES * (len(workload.queries) or workload.chunks)
+        metrics = end_to_end_metrics(
+            tally, cold_start_s - own_s, rss, workload, detail, counts, min_samples
+        )
     print(json.dumps({"detail": detail}))
     print(
         json.dumps(
@@ -275,35 +285,42 @@ def _m(value: float, unit: str) -> dict:
     return {"value": float(value), "unit": unit}
 
 
-def end_to_end_metrics(tally, setups, rss, workload, detail, counts) -> dict:
-    """Times of passes and operations are reported in calibration units
-    (``calibrate``): on a shared host the same code ran up to 1.6x
-    slower from one minute to the next, and the calibration job slowed
-    with it.  The raw seconds are in ``detail``."""
-    pct, tail_rel = tail(tally.rel_latencies)
-    detail.update(
-        calibration_s=tally.calibrations,
-        pass_s=statistics.median(tally.passes),
-        query_p50_s=statistics.median(tally.latencies),
-        query_tail_s=tail(tally.latencies)[1],
-        query_samples=len(tally.latencies),
-        query_tail_percentile=pct,
-        error_rate=tally.failed / tally.attempted,
-    )
-    if workload.chunks:
-        detail["cdc_events_per_s"] = counts["events"] / detail["pass_s"]
-    return {
-        "setup_s": _m(statistics.median(setups), "s"),
-        "pass_rel": _m(statistics.median(tally.rel_passes), "calib"),
-        "query_p50_rel": _m(statistics.median(tally.rel_latencies), "calib"),
-        "query_tail_rel": _m(tail_rel, "calib"),
-        "peak_rss_mb": _m(rss, "MB"),
-    }
+def end_to_end_metrics(tally, setup_s, rss, workload, detail, counts, min_samples) -> dict:
+    """``setup_s`` runs from process start to the first timed operation
+    (interpreter, imports, JVM, session, registry, catalog, warm-up),
+    less the benchmark's own work in it.  Times of passes and operations
+    are reported in calibration units (``calibrate``): on a shared host
+    the same code ran up to 1.6x slower from one minute to the next, and
+    the calibration job slowed with it.  The raw seconds are in
+    ``detail``.  Metrics without samples (every pass failed) are left
+    out; the result then reads ``correct: false``."""
+    metrics = {"setup_s": _m(setup_s, "s")}
+    detail["calibration_s"] = tally.calibrations
+    if tally.passes:
+        detail["pass_s"] = statistics.median(tally.passes)
+        metrics["pass_rel"] = _m(statistics.median(tally.rel_passes), "calib")
+        if workload.chunks:
+            detail["cdc_events_per_s"] = counts["events"] / detail["pass_s"]
+    if tally.latencies:
+        pct, tail_rel = tail(tally.rel_latencies, min_samples)
+        detail.update(
+            query_p50_s=statistics.median(tally.latencies),
+            query_tail_s=tail(tally.latencies, min_samples)[1],
+            query_samples=len(tally.latencies),
+            query_tail_percentile=pct,
+        )
+        metrics["query_p50_rel"] = _m(statistics.median(tally.rel_latencies), "calib")
+        metrics["query_tail_rel"] = _m(tail_rel, "calib")
+    metrics["peak_rss_mb"] = _m(rss, "MB")
+    return metrics
 
 
 def layer_metrics(tracer, tally, stream, cores, probe_s, detail) -> dict:
-    """Per-layer numbers of the traced passes, averaged per pass."""
+    """Per-layer numbers of the traced passes, averaged per pass; only
+    ``host.probe_s`` when no traced pass succeeded."""
     n = len(tally.traced_passes)
+    if not n:
+        return {"host.probe_s": _m(probe_s, "s")}
     wall = sum(tally.traced_passes)
     t = tracer
     execute_s = t.total_seconds("execute")
@@ -320,13 +337,13 @@ def layer_metrics(tracer, tally, stream, cores, probe_s, detail) -> dict:
         / n,
         state_read_s_per_pass=t.total_seconds("state") / n,
     )
-    return {
+    metrics = {
         "catalog.calls": _m(t.count("catalog") / n, "count"),
         "catalog.jobs": _m(t.count("catalog", "jobs") / n, "count"),
         "catalog.share": _m(t.total_seconds("catalog") / wall, "ratio"),
         "build.s": _m(t.self_seconds("build") / n, "s"),
         "build.jobs": _m(t.count("build", "jobs") / n, "count"),
-        "build.share": _m(t.total_seconds("build") / wall, "ratio"),
+        "build.share": _m(t.self_seconds("build") / wall, "ratio"),
         "plan.s": _m(t.total_seconds("plan") / n, "s"),
         "plan.exchanges": _m(t.count("plan", "exchanges") / n, "count"),
         "execute.s": _m(execute_s / n, "s"),
@@ -358,15 +375,17 @@ def layer_metrics(tracer, tally, stream, cores, probe_s, detail) -> dict:
         "state.versions": _m(stream.state_versions / n, "count"),
         "state.read_share": _m(t.total_seconds("state") / wall, "ratio"),
         "host.probe_s": _m(probe_s, "s"),
+    }
+    if len(tally.rel_passes) > 1:
         # traced against untraced passes after the first (still warming),
         # each in calibration units
-        "tracing.overhead": _m(
+        metrics["tracing.overhead"] = _m(
             statistics.median(tally.rel_traced_passes)
             / statistics.median(tally.rel_passes[1:])
             - 1.0,
             "ratio",
-        ),
-    }
+        )
+    return metrics
 
 
 if __name__ == "__main__":

@@ -2,8 +2,8 @@
 
     python3 -m pytest perfbench -q
 
-The generator and helper tests take seconds; the smoke runs start one
-Spark session per workload and trace mode at sf0.001 (about 40 s each).
+The generator and helper tests take seconds; the smoke and failure runs
+start one Spark session each at sf0.001 (about 40 s each).
 """
 
 from __future__ import annotations
@@ -84,10 +84,15 @@ def test_declared_workloads_exist():
 
 
 def test_tail_keeps_ten_samples_beyond():
-    pct, value = tail([float(i) for i in range(1, 101)])
+    pct, value = tail([float(i) for i in range(1, 101)], 100)
     assert (pct, value) == (90.0, 90.0)
     assert sum(v > value for v in range(1, 101)) == 10
-    assert tail([3.0, 1.0, 2.0]) == (100.0, 3.0)
+    # the fewest samples a run takes fix the percentile; more samples
+    # sharpen the value at that percentile
+    pct, value = tail([float(i) for i in range(1, 34)], 33)
+    assert sum(v > value for v in range(1, 34)) == 10
+    assert tail([float(i) for i in range(1, 67)], 33) == (pct, 46.0)
+    assert tail([3.0, 1.0, 2.0], 3) == (100.0, 3.0)
 
 
 def test_refuses_to_run_without_the_engine(tmp_path):
@@ -129,3 +134,36 @@ def test_smoke_prints_every_declared_metric(workload, trace, tmp_path):
     detail = json.loads(p.stdout.strip().splitlines()[-2])["detail"]
     for key in ("cores", "driver_memory", "spark_version", "sf"):
         assert detail[key]
+
+
+@pytest.mark.parametrize(
+    "workload, broken, trace",
+    [("cdc-stream-sf0.1", "drain", 0), ("olap-sf0.01", "run_query", 1)],
+)
+def test_failed_operations_are_counted(workload, broken, trace, tmp_path):
+    """When every timed operation raises, the run still prints its result
+    line: the failures counted, ``correct`` false, and only the metrics
+    that have samples."""
+    script = tmp_path / "broken_run.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path[:0] = [{ROOT!r}, {HERE!r}]\n"
+        "import run, workloads\n"
+        "def fail(*args, **kwargs):\n"
+        "    raise RuntimeError('injected failure')\n"
+        f"workloads.{broken} = fail\n"
+        "sys.exit(run.main(sys.argv[1:]))\n"
+    )
+    p = subprocess.run(
+        [sys.executable, str(script), "--workload", workload, "--seed", "1",
+         "--seconds", "1", "--trace", str(trace), "--sf", "0.001"],
+        cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    result = json.loads(p.stdout.strip().splitlines()[-1])
+    assert result["correct"] is False
+    assert 1 <= result["failed"] <= result["attempted"]
+    want = {"host.probe_s"} if trace else {"setup_s", "peak_rss_mb"}
+    assert set(result["metrics"]) == want
+    detail = json.loads(p.stdout.strip().splitlines()[-2])["detail"]
+    assert "injected failure" in detail["errors"][0]

@@ -71,7 +71,7 @@ WORKLOADS = {
             ("documents", "embeddings", "events"),
             tuple(LLM),
         ),
-        Workload("cdc-stream-sf0.1", 0.1, ("events",), chunks=12),
+        Workload("cdc-stream-sf0.1", 0.1, ("events",), chunks=8),
     )
 }
 
@@ -132,12 +132,17 @@ def calibrate(spark, runs: int) -> list[float]:
     return times
 
 
-def done(t_begin: float, n_pass: int, seconds: float, traced: bool) -> bool:
+MIN_PASSES = 3
+
+
+def done(t_begin: float, n_pass: int, seconds: float) -> bool:
     """Stop after ``n_pass`` passes when one more would end past
-    ``seconds`` (at the mean pass time so far).  A traced run makes at
-    least three (untraced, traced, untraced), so its traced pass can be
-    compared with an untraced pass that is not the first."""
-    if traced and n_pass < 3:
+    ``seconds`` (at the mean pass time so far), but not before
+    ``MIN_PASSES``: the first pass is still warming up, the median of
+    three passes is not, and a traced run (untraced, traced, untraced)
+    can compare its traced pass with an untraced pass that is not the
+    first."""
+    if n_pass < MIN_PASSES:
         return False
     elapsed = time.perf_counter() - t_begin
     return elapsed + elapsed / n_pass > seconds
@@ -146,25 +151,31 @@ def done(t_begin: float, n_pass: int, seconds: float, traced: bool) -> bool:
 # -- batch workloads ------------------------------------------------------
 
 
-def check_batch(spark, specs, data_dir: str, names, tally: Tally) -> None:
+def check_batch(spark, specs, data_dir: str, names, tally: Tally) -> float:
     """Compare every query of the mix with its DuckDB oracle.  Runs once,
-    before the timed passes, and doubles as their warm-up."""
+    before the timed passes, and doubles as their warm-up.  Returns the
+    seconds spent on the oracle side (DuckDB and the comparison)."""
     import parity
 
+    t0 = time.perf_counter()
     con = parity.make_duckdb(data_dir)
+    oracle_s = time.perf_counter() - t0
     try:
         for name in names:
             tally.attempted += 1
             try:
                 got = specs[name].fn(spark, data_dir).toPandas()
+                t0 = time.perf_counter()
                 want = con.execute(specs[name].oracle).df()
                 problems = parity.compare_frames(got, want)
+                oracle_s += time.perf_counter() - t0
             except Exception as exc:  # noqa: BLE001 — counted, reported
                 problems = [f"{type(exc).__name__}: {exc}"]
             if problems:
                 tally.fail(f"check {name}", "; ".join(problems))
     finally:
         con.close()
+    return oracle_s
 
 
 def run_query(spark, fn, data_dir: str, tracer: Tracer) -> None:
@@ -211,16 +222,17 @@ def measure_batch(
         tally.calibrations.append(calib)
         tally.latencies += latencies
         tally.rel_latencies += [x / calib for x in latencies]
-        if tracer.enabled:
+        # a pass in which a query failed is not a pass sample
+        if tracer.enabled and len(latencies) == len(order):
             tally.traced_passes.append(wall)
             tally.rel_traced_passes.append(wall / calib)
-        else:
+        elif len(latencies) == len(order):
             tally.passes.append(wall)
             tally.rel_passes.append(wall / calib)
         if tracer.enabled:
             tracer.collect_job_counters()
         n_pass += 1
-        if done(t_begin, n_pass, seconds, traced):
+        if done(t_begin, n_pass, seconds):
             break
     tracer.enabled = traced
 
@@ -346,7 +358,7 @@ def measure_stream(
             if problems:
                 tally.fail(f"check drain {n_pass}", "; ".join(problems))
         n_pass += 1
-        if done(t_begin, n_pass, seconds, traced):
+        if done(t_begin, n_pass, seconds):
             break
     tracer.enabled = traced
     spark.streams.removeListener(progress.listener)
