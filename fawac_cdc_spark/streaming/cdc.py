@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import SCHEMAS
 from ..operators.helpers import money
 
 
@@ -71,19 +72,10 @@ def _money_cents(v) -> int:
         * 100
     )
 
-# Schema handed to readStream (file sources require one). Matches the
-# catalog contract: events.ts already converted to TIMESTAMP_NTZ micros
-# by the chunk-writer (tests) or upstream ingestion.
-EVENT_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+# Schema handed to readStream (file sources require one): the catalog
+# contract, events.ts already converted to TIMESTAMP_NTZ micros by the
+# chunk-writer (tests) or upstream ingestion.
+EVENT_STREAM_SCHEMA = SCHEMAS["events"]
 
 
 def read_event_stream(
@@ -206,11 +198,9 @@ def _state_versions(state_dir: str) -> list[int]:
     return sorted(out)
 
 
-def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]:
-    """bucket id (str) -> state_dir-relative data directory.
-
-    ``version`` selects a specific committed epoch (time travel); default
-    is the newest commit."""
+def _load_manifest(state_dir: str, version: int | None = None) -> dict:
+    """The committed manifest document of ``version`` (newest by
+    default), or ``{}`` when nothing is committed yet."""
     versions = _state_versions(state_dir)
     if not versions:
         return {}
@@ -219,17 +209,33 @@ def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]
     elif version not in versions:
         raise ValueError(f"no committed version {version}; have {versions}")
     with open(os.path.join(state_dir, f"v{version}.json")) as f:
-        return json.load(f)["buckets"]
+        return json.load(f)
 
 
-def _commit_manifest(state_dir: str, epoch_id: int, buckets: dict[str, str]) -> None:
-    """Atomic swap-on-commit: write sidecar, rename into place."""
-    import json
+def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]:
+    """bucket id (str) -> state_dir-relative data directory.
 
+    ``version`` selects a specific committed epoch (time travel); default
+    is the newest commit."""
+    return _load_manifest(state_dir, version).get("buckets", {})
+
+
+def _commit_manifest(
+    state_dir: str, epoch_id: int, buckets: dict[str, str], schema: T.StructType
+) -> None:
+    """Atomic swap-on-commit: write sidecar, rename into place.
+
+    ``schema`` is the schema the bucket files were written with; readers
+    hand it to ``spark.read.schema`` instead of inferring it (the schema
+    kept in the commit log, as Delta and Iceberg do)."""
     path = os.path.join(state_dir, f"v{epoch_id}.json")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"epoch": epoch_id, "buckets": buckets}, f, sort_keys=True)
+        json.dump(
+            {"epoch": epoch_id, "buckets": buckets, "schema": schema.jsonValue()},
+            f,
+            sort_keys=True,
+        )
     os.replace(tmp, path)
 
 
@@ -239,12 +245,14 @@ def read_upsert_state(
     """Read a committed snapshot (A33 restore semantics): resolve the
     manifest — newest by default, or any committed epoch via ``version``
     (time travel; data files are immutable, so every historical manifest
-    stays readable until its epochs are vacuumed)."""
-    buckets = _read_manifest(state_dir, version)
-    if not buckets:
+    stays readable until its epochs are vacuumed).  The read uses the
+    schema the manifest records, so it launches no schema-inference job."""
+    manifest = _load_manifest(state_dir, version)
+    if not manifest.get("buckets"):
         return None
-    paths = [os.path.join(state_dir, rel) for rel in buckets.values()]
-    return spark.read.parquet(*paths)
+    paths = [os.path.join(state_dir, rel) for rel in manifest["buckets"].values()]
+    schema = T.StructType.fromJson(manifest["schema"])
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def write_state_snapshot(
@@ -278,7 +286,7 @@ def write_state_snapshot(
         .collect()
     )
     manifest = {str(k): f"{epoch_rel}/bucket={k}" for k in touched}
-    _commit_manifest(state_dir, epoch_id, manifest)
+    _commit_manifest(state_dir, epoch_id, manifest, df.schema)
 
 
 def state_versions(state_dir: str) -> list[int]:
@@ -312,7 +320,7 @@ def cdc_upsert_run(
             r["bucket"] for r in batch.select("bucket").distinct().collect()
         )
         if not touched:
-            _commit_manifest(state_dir, epoch_id, manifest)
+            _commit_manifest(state_dir, epoch_id, manifest, batch_df.schema)
             return
         prev_paths = [
             os.path.join(state_dir, manifest[str(k)])
@@ -321,8 +329,10 @@ def cdc_upsert_run(
         ]
         merged = batch
         if prev_paths:
-            prev = sess.read.parquet(*prev_paths).withColumn(
-                "bucket", _bucket_col(n_buckets)
+            prev = (
+                sess.read.schema(batch_df.schema)
+                .parquet(*prev_paths)
+                .withColumn("bucket", _bucket_col(n_buckets))
             )
             merged = prev.unionByName(batch)
         epoch_rel = f"data/e{epoch_id}"
@@ -335,7 +345,7 @@ def cdc_upsert_run(
         new_manifest = dict(manifest)
         for k in touched:
             new_manifest[str(k)] = f"{epoch_rel}/bucket={k}"
-        _commit_manifest(state_dir, epoch_id, new_manifest)
+        _commit_manifest(state_dir, epoch_id, new_manifest, batch_df.schema)
 
     q = (
         events.writeStream.foreachBatch(upsert)

@@ -43,3 +43,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF0001
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` in a job group of its own and
+    returns how many Spark jobs it launched (statusTracker, after the
+    listener bus has delivered every event)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -61,6 +61,27 @@ def test_filter_range_scan_pushdown(spark, sf_dir):
     assert "GreaterThan" in pushed or "LessThan" in pushed or "l_" in pushed
 
 
+def test_declared_schema_scan_stays_vectorized_with_pushdown(spark, sf_dir):
+    """``load_table`` reads with its declared schema; the lineitem scan
+    must still be the vectorized reader with the filter pushed down."""
+    from pyspark.sql import functions as F
+
+    from fawac_cdc_spark.catalog import load_table
+
+    df = (
+        load_table(spark, sf_dir, "lineitem")
+        .where(F.col("l_quantity") > 10)
+        .select("l_orderkey")
+    )
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    scan = plan.split("Scan parquet", 2)[2]
+    assert "Batched: true" in scan
+    pushed = scan.split("PushedFilters:", 1)[1].splitlines()[0]
+    assert "GreaterThan(l_quantity,10.0)" in pushed
+
+
 def test_no_unintended_cartesian_products(spark, sf_dir):
     """Cross joins are legal only where a single broadcast row/stats frame
     is intentionally attached; candidate generation (dedup, similarity)

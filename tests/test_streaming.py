@@ -143,6 +143,38 @@ def test_cdc_upsert_matches_batch(spark, sf_dir, chunk_dir, tmp_path):
     assert not compare_frames(final, want)
 
 
+def test_read_upsert_state_launches_no_jobs(
+    spark, chunk_dir, tmp_path, count_jobs
+):
+    """The manifest records the state's schema, so restoring a snapshot
+    launches no schema-inference job."""
+    state_dir = str(tmp_path / "state")
+    cdc.cdc_upsert_run(spark, chunk_dir, state_dir, str(tmp_path / "ckpt"))
+    assert count_jobs(lambda: cdc.read_upsert_state(spark, state_dir)) == 0
+
+
+def test_manifest_schema_round_trips_snapshot_columns(spark, sf_dir, tmp_path):
+    """A snapshot committed with other columns than the event stream
+    reads back with exactly those columns — the manifest's schema, not
+    the events schema with null-filled extras."""
+    cols = ["event_id", "user_id", "ts", "event_type", "value"]
+    e = (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("event_id") < 50)
+        .select(*cols)
+    )
+    state_dir = str(tmp_path / "state")
+    cdc.write_state_snapshot(e, state_dir, 7)
+    got = cdc.read_upsert_state(spark, state_dir, version=7)
+    assert got.columns == cols
+    assert [f.dataType for f in got.schema.fields] == [
+        f.dataType for f in e.schema.fields
+    ]
+    want = cdc._latest_per_key(e)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0
+
+
 def test_cdc_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     """Incremental MERGE contract: a micro-batch whose keys hash into one
     bucket must leave every other bucket's data files untouched on disk —
@@ -1682,7 +1714,7 @@ def test_vacuum_state_expires_versions_and_reclaims_files(spark, sf_dir, tmp_pat
     write_state_snapshot(e.where(F.col("user_id") % 2 == 0), state_dir, 4)
     v4_buckets = dict(_read_manifest(state_dir, 4))
     v4_buckets[carried_bucket] = carried_rel  # carry v3's bucket forward
-    _commit_manifest(state_dir, 5, v4_buckets)
+    _commit_manifest(state_dir, 5, v4_buckets, e.schema)
     stats2 = vacuum_state(state_dir, retain_last=1)  # keep only v5
     assert state_versions(state_dir) == [5]
     assert os.path.isdir(os.path.join(state_dir, carried_rel))  # survived
